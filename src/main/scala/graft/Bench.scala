@@ -14,6 +14,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // The tag becomes part of a file name (BENCH_full_<tag>.json): reject
+    // path separators and the like before any query runs.
+    val tag = sys.env.get("SPARK_GRAFT_BENCH_TAG")
+    tag.foreach(t => require(t.matches("[A-Za-z0-9._-]+"),
+      s"SPARK_GRAFT_BENCH_TAG must match [A-Za-z0-9._-]+, got '$t'"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // A/B'd in round 7 (BENCH_AB_r7.json): round 6 made ContextCleaner
     // removals synchronous session-wide, reasoning that async cleanup of
@@ -158,9 +163,9 @@ object Bench {
     // stable "previous" artifact — a tagged copy committed at end of
     // round preserves the full per-query map per round. The driver
     // never sets the tag, so its runs are byte-identical to before.
-    sys.env.get("SPARK_GRAFT_BENCH_TAG").foreach { tag =>
+    tag.foreach { t =>
       java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"BENCH_full_$tag.json"), fullJson)
+        java.nio.file.Paths.get(s"BENCH_full_$t.json"), fullJson)
     }
     val line =
       s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"families":$fams,"slowest":$slowest,"errors":$errs,"sf":"$sfDir","full":"$fullArtifact"}"""

@@ -2,29 +2,27 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-import graft.plans.{AdcDistance, CosineSimilarity, DotProduct, GraftFunctions, L2SquaredDistance, MatrixApply, MinHashBands, SignedProjection, SimHash64}
+import graft.plans._
 
-/** Spark-idiomatic packaging of graft's native expressions: set
+/** The SQL route to graft's native expressions: set
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * (spark-submit / spark-defaults.conf / SparkSession.builder.config)
-  * and `graft_cosine`, `graft_l2sq`, `graft_adc`, `graft_simhash64`
-  * resolve in ANY SQL surface of the session — spark-sql shell, JDBC,
-  * `spark.sql(...)` — with no graft code on the driver path.
-  *
-  * `GraftFunctions.register` remains the runtime-injection twin for
-  * sessions built without the config (tests, the Verify/Bench mains,
-  * notebook sessions you don't control the launch of); both register
-  * identical expression builders.
+  * (spark-submit / spark-defaults.conf / SparkSession.builder.config),
+  * or build the session with [[GraftSession]], and every `graft_*`
+  * function below resolves in ANY SQL surface of the session —
+  * spark-sql shell, JDBC, `spark.sql(...)`. Scala callers need none of
+  * this: [[graft.plans.Kernels]] builds the same expressions as
+  * Columns on any session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit =
-    GraftExtensions.injectables.foreach { case (name, builder) =>
+    GraftExtensions.functions.foreach { case (name, builder) =>
       ext.injectFunction(
         (FunctionIdentifier(name),
           new ExpressionInfo(classOf[GraftExtensions].getName, name),
@@ -33,74 +31,53 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Name -> expression builder for every injectable scalar function.
-    * (TopKByScore is registered only via GraftFunctions.register: its
-    * k argument needs literal extraction, which shares the same
-    * builder there.)
+
+  private def intLit(fn: String, what: String, e: Expression): Int = e match {
+    case Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(
+      s"$fn $what must be an int literal, got $other")
+  }
+
+  /** Name -> expression builder for every graft SQL function. Int,
+    * seed and matrix arguments must be constants; they are read here,
+    * at analysis time, into the expression's Scala fields.
     */
-  private[graft] val injectables: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    GraftFunctions.CosineName -> (exprs => CosineSimilarity(exprs(0), exprs(1))),
-    GraftFunctions.L2SqName -> (exprs => L2SquaredDistance(exprs(0), exprs(1))),
-    GraftFunctions.AdcName -> (exprs => AdcDistance(exprs(0), exprs(1))),
-    GraftFunctions.DotName -> (exprs => DotProduct(exprs(0), exprs(1))),
-    GraftFunctions.SimHashName -> (exprs => SimHash64(exprs(0))),
-    GraftFunctions.SortedInterName ->
-      (exprs => graft.plans.SortedIntersectSize(exprs(0), exprs(1))),
-    GraftFunctions.PairSampleName ->
-      (exprs => graft.plans.PairSampleMatch(exprs(0), exprs(1))),
-    GraftFunctions.LaneHashesName -> (exprs => {
-      val lanes = exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_lane_hashes lanes must be an int literal, got $other")
-      }
-      graft.plans.LaneHashes(exprs(0), lanes)
-    }),
-    GraftFunctions.MinHashBandsName -> (exprs => {
-      def litInt(e: Expression, what: String): Int = e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_minhash_bands $what must be an int literal, got $other")
-      }
-      MinHashBands(exprs(0), litInt(exprs(1), "bands"), litInt(exprs(2), "rowsPerBand"))
-    }),
-    GraftFunctions.RpName -> (exprs => {
-      def litInt(e: Expression, what: String): Int = e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_rp $what must be an int literal, got $other")
-      }
-      val seed = exprs(3) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(s, _) if s != null =>
-          s.toString
+  private[graft] val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_cosine" -> (a => CosineSimilarity(a(0), a(1))),
+    "graft_l2sq" -> (a => L2SquaredDistance(a(0), a(1))),
+    "graft_adc" -> (a => AdcDistance(a(0), a(1))),
+    "graft_dot" -> (a => DotProduct(a(0), a(1))),
+    "graft_simhash64" -> (a => SimHash64(a(0))),
+    "graft_sorted_inter" -> (a => SortedIntersectSize(a(0), a(1))),
+    "graft_pair_sample" -> (a => PairSampleMatch(a(0), a(1))),
+    "graft_lane_hashes" -> (a =>
+      LaneHashes(a(0), intLit("graft_lane_hashes", "lanes", a(1)))),
+    "graft_minhash_bands" -> (a => MinHashBands(a(0),
+      intLit("graft_minhash_bands", "bands", a(1)),
+      intLit("graft_minhash_bands", "rowsPerBand", a(2)))),
+    "graft_rp" -> { a =>
+      val seed = a(3) match {
+        case Literal(s, _) if s != null => s.toString
         case other => throw new IllegalArgumentException(
           s"graft_rp seed must be a string literal, got $other")
       }
-      SignedProjection(exprs(0), litInt(exprs(1), "dims"), litInt(exprs(2), "outDims"), seed)
-    }),
-    GraftFunctions.MatApplyName -> (exprs => {
-      // The matrix arrives as an array<array<double>> literal (typedLit)
-      // consumed at analysis time — the built expression carries it as a
-      // JVM reference object, so no per-row literal walk survives in the
-      // plan.
-      val mat = exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(
-              ad: org.apache.spark.sql.catalyst.util.ArrayData,
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.DoubleType, _), _)) =>
+      SignedProjection(a(0),
+        intLit("graft_rp", "dims", a(1)), intLit("graft_rp", "outDims", a(2)), seed)
+    },
+    "graft_matapply" -> { a =>
+      // Any constant matrix: a typedLit from the DataFrame API, or a
+      // nested array(array(...)) call from SQL text.
+      val mat = (a(1).dataType, a(1).foldable) match {
+        case (ArrayType(ArrayType(DoubleType, _), _), true) =>
+          val ad = a(1).eval().asInstanceOf[ArrayData]
           Array.tabulate(ad.numElements())(i => ad.getArray(i).toDoubleArray())
-        case other => throw new IllegalArgumentException(
-          s"graft_matapply matrix must be an array<array<double>> literal, got $other")
+        case _ => throw new IllegalArgumentException(
+          s"graft_matapply matrix must be a constant array<array<double>>, got ${a(1)}")
       }
-      MatrixApply(exprs(0), mat)
-    })
+      MatrixApply(a(0), mat)
+    },
+    "graft_topk" -> (a =>
+      Kernels.topkFunction(a(0), a(1), intLit("graft_topk", "k", a(2)))),
+    "graft_kmv" -> (a => Kernels.kmvFunction(a(0), intLit("graft_kmv", "k", a(1))))
   )
-
-  /** The builders as a FunctionRegistry-shaped seq, for reuse by
-    * runtime registration.
-    */
-  private[graft] def asRegistryEntries
-      : Seq[(String, FunctionRegistry.FunctionBuilder)] =
-    injectables.map { case (n, b) => n -> (b: FunctionRegistry.FunctionBuilder) }
 }

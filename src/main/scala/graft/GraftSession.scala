@@ -13,6 +13,10 @@ import org.apache.spark.sql.SparkSession
   * At cluster scale the same builder is used with `master` unset (taken
   * from spark-submit) and `shufflePartitions` sized to ~2-3x total
   * cores with partitions targeting 128-256MB post-shuffle.
+  *
+  * Every session built here installs [[GraftExtensions]], so the
+  * `graft_*` native functions resolve in its SQL. Scala code needs no
+  * session setup for them: [[graft.plans.Kernels]] works on any session.
   */
 object GraftSession {
 
@@ -34,6 +38,7 @@ object GraftSession {
     // start at `shufflePartitions`; pass a positive value to widen.
     val b0 = SparkSession
       .builder()
+      .withExtensions(new GraftExtensions)
       .appName("graft")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -70,14 +75,9 @@ object GraftSession {
     master.fold(b)(b.master)
   }
 
-  /** Local session for tests / bench on this container, with graft's
-    * native expressions pre-registered.
-    */
-  def local(cores: Int = 32, shufflePartitions: Int = 32): SparkSession = {
-    val s = builder(Some(s"local[$cores]"), shufflePartitions).getOrCreate()
-    graft.plans.GraftFunctions.register(s)
-    s
-  }
+  /** Local session for tests and benches. */
+  def local(cores: Int = 32, shufflePartitions: Int = 32): SparkSession =
+    builder(Some(s"local[$cores]"), shufflePartitions).getOrCreate()
 
   /** Cluster deployment preset — the builder a spark-submit driver
     * calls (master/executors come from the submit args). Sizes the
@@ -98,10 +98,7 @@ object GraftSession {
     *    — pass `durable = true` to Dedup.connectedComponents /
     *    buildIvfPq so their per-round pins survive executor loss;
     *  - `warehouseDir` is the catalog root for Tables.writeBucketed's
-    *    shuffle-free recurring-join tables;
-    *  - graft's native expressions are registered on create (the
-    *    spark.sql.extensions=graft.GraftExtensions config route works
-    *    too and needs no code on the driver path).
+    *    shuffle-free recurring-join tables.
     */
   def cluster(
       totalCores: Int,
@@ -114,7 +111,6 @@ object GraftSession {
       .config("spark.sql.warehouse.dir", warehouseDir)
       .getOrCreate()
     s.sparkContext.setCheckpointDir(checkpointDir)
-    graft.plans.GraftFunctions.register(s)
     s
   }
 }

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.plans.Kernels
+
 /** Vector math over `array<float>` embedding columns — the compute core
   * of the embeddinghub surface (reference:
   * embeddinghub/embeddingstore/index.h approx_nearest over a cosine
@@ -27,48 +29,37 @@ object VectorFunctions {
       (acc, x) => acc + x)
 
   /** Inner product via the native codegen'd expression
-    * (graft.plans.DotProduct) — the hnswlib ip-space kernel. Requires
-    * GraftFunctions.register (every graft operator entry point calls
-    * it); [[dot]] is the registration-free HOF twin.
+    * (graft.plans.DotProduct) — the hnswlib ip-space kernel; [[dot]] is
+    * its HOF twin and test reference.
     */
-  def dotNative(a: Column, b: Column): Column =
-    call_function(graft.plans.GraftFunctions.DotName, a, b)
+  def dotNative(a: Column, b: Column): Column = Kernels.dot(a, b)
 
   /** L2 norm. */
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity in [-1, 1], via the native codegen'd Catalyst
-    * expression (graft.plans.CosineSimilarity). The session must have
-    * called `GraftFunctions.register` first — every graft operator
-    * entry point does.
+    * expression (graft.plans.CosineSimilarity).
     */
-  def cosine(a: Column, b: Column): Column =
-    call_function(graft.plans.GraftFunctions.CosineName, a, b)
+  def cosine(a: Column, b: Column): Column = Kernels.cosine(a, b)
 
   /** Higher-order-function cosine: same sequential double accumulation,
-    * no codegen. Kept as the registration-free fallback and as the
-    * cross-check for the native expression in tests.
+    * no codegen. The test reference for the native expression.
     */
   def cosineHof(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
 
   /** Squared euclidean distance, via the native codegen'd expression
-    * (graft.plans.L2SquaredDistance). Requires GraftFunctions.register
-    * (every graft operator entry point calls it).
+    * (graft.plans.L2SquaredDistance).
     */
-  def l2Sq(a: Column, b: Column): Column =
-    call_function(graft.plans.GraftFunctions.L2SqName, a, b)
+  def l2Sq(a: Column, b: Column): Column = Kernels.l2sq(a, b)
 
   /** PQ asymmetric distance: sum_j tables(j)(codes(j)) via the native
-    * codegen'd expression (graft.plans.AdcDistance). Requires
-    * GraftFunctions.register (every graft operator entry point calls
-    * it).
+    * codegen'd expression (graft.plans.AdcDistance).
     */
-  def adc(tables: Column, codes: Column): Column =
-    call_function(graft.plans.GraftFunctions.AdcName, tables, codes)
+  def adc(tables: Column, codes: Column): Column = Kernels.adc(tables, codes)
 
   /** Higher-order-function ADC: the same sequential subspace-order
-    * fold, no codegen. Registration-free fallback and the cross-check
-    * for the native expression in tests. `m` is the subspace count.
+    * fold, no codegen. The test reference for the native expression.
+    * `m` is the subspace count.
     */
   def adcHof(tables: Column, codes: Column, m: Int): Column =
     aggregate(
@@ -77,8 +68,8 @@ object VectorFunctions {
       (acc, j) => acc + element_at(element_at(tables, j), element_at(codes, j) + lit(1)))
 
   /** Higher-order-function squared euclidean distance: same sequential
-    * double accumulation, no codegen. Registration-free fallback and
-    * the cross-check for the native expression in tests.
+    * double accumulation, no codegen. The test reference for the native
+    * expression.
     */
   def l2SqHof(a: Column, b: Column): Column = {
     val d = zip_with(asDouble(a), asDouble(b), (x, y) => x - y)

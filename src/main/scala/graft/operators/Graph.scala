@@ -531,7 +531,6 @@ object Graph {
     require(nProbe >= 1, s"nProbe must be >= 1: $nProbe")
     def cos(a: Column, b: Column) = graft.functions.VectorFunctions.cosine(a, b)
     (sub: DataFrame, candK: Int) => {
-      graft.plans.GraftFunctions.register(sub.sparkSession)
       // cell-keyed corpus via the carried-vector assignment (see
       // Similarity.nearestCentroidWithVec) — no corpus re-join (r11)
       val corpusCells = Similarity.nearestCentroidWithVec(sub, keyCol, vecCol, cents)
@@ -591,7 +590,6 @@ object Graph {
       kBuild: Int,
       maxLevel: Int
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
     val leveled = hnswLevels(space, keyCol, vecCol, maxLevel)
     val edges = (0 to maxLevel)
       .map { l =>

@@ -75,7 +75,6 @@ object Quantization {
       ksub: Int,
       iterations: Int
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
     val sub = subVectors(space, keyCol, vecCol, m, dims)
     // Seeds: the ksub smallest keys (TakeOrdered — per-partition top-k,
     // no global sort), split into subspaces; centroid_id = key rank.
@@ -161,7 +160,6 @@ object Quantization {
       dims: Int,
       codebooks: DataFrame
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
     assignCells(subVectors(space, keyCol, vecCol, m, dims), codebooks)
       .groupBy(col("vec_id"))
       .agg(array_sort(collect_list(struct(col("subspace"), col("cell")))).as("sc"))
@@ -185,7 +183,6 @@ object Quantization {
       codebooks: DataFrame,
       k: Int
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(queries.sparkSession)
     val qsub = subVectors(queries, keyCol, vecCol, m, dims)
       .withColumnRenamed("vec_id", "query_id")
     // tables[j][c+1] = ||q_sub_j - centroid_c||^2, positionally indexed.
@@ -266,7 +263,6 @@ object Quantization {
       pinEncoded: Boolean = false,
       durable: Boolean = false
   ): IvfPqIndex = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     // Coarse codebook (nCells rows, broadcast) + corpus cell assignment.
     val coarse = Similarity
       .kmeansCodebook(corpus, keyCol, vecCol, nCells, coarseIterations)
@@ -304,7 +300,6 @@ object Quantization {
       m: Int,
       dims: Int
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(rows.sparkSession)
     val resid = Similarity
       .nearestCentroidWithVec(rows, keyCol, vecCol,
         index.coarse.select(col("cell").as("centroid_id"), col("c_vec").as("centroid")))
@@ -389,7 +384,6 @@ object Quantization {
       coarseIterations: Int,
       shiftThreshold: Double
   ): IvfPqMaintenance = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val fresh = Similarity.centroids(
       Similarity.nearestCentroidWithVec(
         corpus, keyCol, vecCol,
@@ -426,7 +420,6 @@ object Quantization {
       nProbe: Int,
       k: Int
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(queries.sparkSession)
     val coarse = index.coarse
     val cb = index.codebooks
     val enc = index.encoded
@@ -626,11 +619,9 @@ object Quantization {
       vecCol: String,
       rot: Seq[Seq[Double]]
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
     space.select(
       col(keyCol).as("vec_id"),
-      call_function(
-        graft.plans.GraftFunctions.MatApplyName, col(vecCol), typedLit(rot)).as("vec"))
+      graft.plans.Kernels.matApply(col(vecCol), rot.map(_.toArray).toArray).as("vec"))
   }
 
   /** Decode PQ codes back to their reconstructed vectors (sub-centroid
@@ -734,8 +725,7 @@ object Quantization {
       outDims: Int,
       seed: String = "rp"
   ): Column =
-    call_function(
-      graft.plans.GraftFunctions.RpName, vec, lit(dims), lit(outDims), lit(seed))
+    graft.plans.Kernels.rp(vec, dims, outDims, seed)
 
   /** Achlioptas-style dense ±1 random projection to `outDims`
     * dimensions: out_j = Σ_i vec[i]·s(i,j) / sqrt(outDims), signs from
@@ -802,7 +792,6 @@ object Quantization {
       dims: Int,
       k: Int
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val c = corpus.select(col(keyCol).as("neighbor_id"), binarySketch(col(vecCol), dims).as("skn"))
     val q = broadcast(
       queries.select(col(keyCol).as("query_id"), binarySketch(col(vecCol), dims).as("skq")))

@@ -80,7 +80,6 @@ object Similarity {
       vecCol: String,
       minSim: Double
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val q = broadcast(
       queries.select(col(keyCol).as("query_id"), col(vecCol).as("q_vec")))
     corpus
@@ -113,7 +112,6 @@ object Similarity {
       perGroup: Int
   ): DataFrame = {
     require(perGroup >= 1, s"perGroup must be >= 1, got $perGroup")
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val q = broadcast(
       queries.select(col(keyCol).as("query_id"), col(vecCol).as("q_vec")))
     val scored = corpus
@@ -148,7 +146,6 @@ object Similarity {
       vecCol: String,
       k: Int
   )(score: (Column, Column) => Column): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val q = broadcast(
       queries.select(col(keyCol).as("query_id"), col(vecCol).as("q_vec")))
     val scored = corpus
@@ -211,7 +208,6 @@ object Similarity {
       k: Int,
       iterations: Int
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
     val cb = kmeansCodebook(space, keyCol, vecCol, k, iterations).pinned()
     space
       .select(col(keyCol).as("vec_id"), col(vecCol).as("vec"))
@@ -251,12 +247,10 @@ object Similarity {
       queries: DataFrame,
       k: Int
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
     val q = broadcast(queries.select(
       col(keyCol).as("query_id"), col(vecCol).as("q_vec"), col(labelCol).as("q_label")))
-    def heap(mask: Column) = call_function(
-      graft.plans.GraftFunctions.TopKName,
-      when(mask, col("sim")), col("neighbor_id"), lit(k))
+    def heap(mask: Column) =
+      graft.plans.Kernels.topk(when(mask, col("sim")), col("neighbor_id"), k)
     val lists = space
       .select(col(keyCol).as("neighbor_id"), col(vecCol).as("n_vec"), col(labelCol).as("n_label"))
       .join(q, col("neighbor_id") =!= col("query_id"))
@@ -336,7 +330,6 @@ object Similarity {
       queryIdCol: String,
       vecCol: String
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val q = broadcast(queryTokens.select(
       col(queryIdCol).as("query_id"), col("qtok"), col(vecCol).as("q_vec")))
     corpus
@@ -365,8 +358,7 @@ object Similarity {
   ): DataFrame =
     scored
       .groupBy(col(groupCol))
-      .agg(call_function(
-        graft.plans.GraftFunctions.TopKName, col(scoreCol), col(idCol), lit(k)).as("top"))
+      .agg(graft.plans.Kernels.topk(col(scoreCol), col(idCol), k).as("top"))
       .select(col(groupCol), posexplode(col("top")).as(Seq("r", "e")))
       .select(
         col(groupCol),
@@ -429,7 +421,6 @@ object Similarity {
       vecCol: String,
       cents: DataFrame
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
     val scored = space
       .select(col(keyCol).as("vec_id"), col(vecCol).as("v"))
       .crossJoin(broadcast(cents))
@@ -465,7 +456,6 @@ object Similarity {
       vecCol: String,
       cents: DataFrame
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
     space
       .select(col(keyCol).as("vec_id"), col(vecCol).as("v"))
       .crossJoin(broadcast(cents))
@@ -488,7 +478,6 @@ object Similarity {
       k: Int,
       nProbe: Int
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val cents = centroids(corpus, groupColForCentroids, vecCol)
     // cell-keyed corpus via the carried-vector assignment (see
     // nearestCentroidWithVec) — no corpus re-join after the argmax
@@ -530,7 +519,6 @@ object Similarity {
       nCells: Int,
       kmeansIterations: Int = 3
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val cents = kmeansCodebook(corpus, keyCol, vecCol, nCells, kmeansIterations)
       .pinned() // index build artifact; don't re-iterate per probe
     // carried-vector assignment: no corpus re-join (nearestCentroidWithVec)
@@ -639,7 +627,6 @@ object Similarity {
       vecCol: String,
       pairs: DataFrame // columns: a, b
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
     val va = space.select(col(keyCol).as("a"), col(vecCol).as("va"))
     val vb = space.select(col(keyCol).as("b"), col(vecCol).as("vb"))
     pairs
@@ -667,7 +654,6 @@ object Similarity {
       k: Int,
       iterations: Int
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
     val keyed = space.select(col(keyCol).as("vec_id"), col(vecCol).as("v"))
     // Seeds = k smallest keys via sort+limit, which Spark executes as
     // TakeOrdered (per-partition top-k then merge) — not a global sort.

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -27,7 +26,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
 
   // Null input arrays, mismatched lengths, and null elements all yield
-  // null — the same semantics as the zip_with/aggregate HOF fallback,
+  // null — the same semantics as the zip_with/aggregate HOF twin,
   // so the two paths agree exactly where inputs are malformed.
   override def nullable: Boolean = true
 
@@ -357,64 +356,4 @@ case class AdcDistance(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): AdcDistance =
     copy(left = newLeft, right = newRight)
-}
-
-/** Runtime registration of graft's native expressions into a session's
-  * function registry (the standalone-library analog of a
-  * SparkSessionExtensions injection — works on any already-built
-  * session, e.g. the driver's).
-  */
-object GraftFunctions {
-  val CosineName = "graft_cosine"
-  val TopKName = "graft_topk"
-  val SimHashName = "graft_simhash64"
-  val L2SqName = "graft_l2sq"
-  val AdcName = "graft_adc"
-  val DotName = "graft_dot"
-  val MinHashBandsName = "graft_minhash_bands"
-  val RpName = "graft_rp"
-  val MatApplyName = "graft_matapply"
-  val KmvName = "graft_kmv"
-  val SortedInterName = "graft_sorted_inter"
-  val PairSampleName = "graft_pair_sample"
-  val LaneHashesName = "graft_lane_hashes"
-
-  def register(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val registry = classic.sessionState.functionRegistry
-    // Scalar builders are shared with the spark.sql.extensions path
-    // (graft.GraftExtensions) so the two registration routes cannot
-    // drift.
-    graft.GraftExtensions.asRegistryEntries.foreach { case (name, builder) =>
-      registry.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-    registry.createOrReplaceTempFunction(
-      TopKName,
-      (exprs: Seq[Expression]) => {
-        val k = exprs(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other =>
-            throw new IllegalArgumentException(s"graft_topk k must be an int literal, got $other")
-        }
-        // Coerce at construction: an int id / float-or-decimal score is
-        // cast here, at analysis time, instead of ClassCastException-ing
-        // inside the aggregate buffer at execution time.
-        TopKByScore(
-          org.apache.spark.sql.catalyst.expressions.Cast(exprs(0), DoubleType),
-          org.apache.spark.sql.catalyst.expressions.Cast(exprs(1), LongType),
-          k)
-      },
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      KmvName,
-      (exprs: Seq[Expression]) => {
-        val k = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other =>
-            throw new IllegalArgumentException(s"graft_kmv k must be an int literal, got $other")
-        }
-        KmvSketch(org.apache.spark.sql.catalyst.expressions.Cast(exprs(0), LongType), k)
-      },
-      "built-in")
-  }
 }

@@ -241,7 +241,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("native one-pass simhash equals the declarative HOF sketch") {
-    graft.plans.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions.col
     val corpus = sources.Tables.load(spark, GraftTestSession.Sf0001, "documents")
     val mismatches = corpus
@@ -414,6 +413,17 @@ class DedupSpec extends AnyFunSuite {
     assert(out(("srcA", "srcB"))._5 >= 1L)
   }
 
+  test("corpusOverlap rejects more than 200 lanes at the call, not in the kernel") {
+    val spark = GraftTestSession.spark
+    import spark.implicits._
+    val docs = Seq((1L, "a b c d", "srcA")).toDF("doc_id", "text", "source")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.corpusOverlap(docs, "source", "text", lanes = 202)
+    }
+    assert(e.getMessage.contains("lanes must be <= 200"), e.getMessage)
+    assert(!e.getStackTrace.exists(_.getClassName.startsWith("graft.plans.LaneHashes")))
+  }
+
   test("editVerifiedPairs: exact dup at distance 0, small edit verified, unrelated text absent") {
     val spark = GraftTestSession.spark
     import spark.implicits._
@@ -542,7 +552,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("graft_sorted_inter: merge-walk size == size(array_intersect) on random sorted sets") {
     val spark = GraftTestSession.spark
-    graft.plans.GraftFunctions.register(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(6)
@@ -555,7 +564,7 @@ class DedupSpec extends AnyFunSuite {
     // exact shape freqSortedTokens produces and the expression requires
     val df = cases.toDF("a", "b")
     val rows = df.select(
-        call_function(graft.plans.GraftFunctions.SortedInterName, col("a"), col("b")).as("m"),
+        graft.plans.Kernels.sortedInter(col("a"), col("b")).as("m"),
         size(array_intersect(col("a"), col("b"))).as("ref"))
       .collect()
     rows.foreach(r => assert(r.getInt(0) == r.getInt(1)))
@@ -563,7 +572,7 @@ class DedupSpec extends AnyFunSuite {
     val asLong = (c: org.apache.spark.sql.Column) => transform(c, x => x.cast("long"))
     val dfl = cases.toDF("a", "b").select(asLong(col("a")).as("a"), asLong(col("b")).as("b"))
     dfl.select(
-        call_function(graft.plans.GraftFunctions.SortedInterName, col("a"), col("b")).as("m"),
+        graft.plans.Kernels.sortedInter(col("a"), col("b")).as("m"),
         size(array_intersect(col("a"), col("b"))).as("ref"))
       .collect()
       .foreach(r => assert(r.getInt(0) == r.getInt(1)))

@@ -319,7 +319,6 @@ class InvariantsSpec extends AnyFunSuite {
   }
 
   test("KmvSketch invariant: k smallest DISTINCT hashes under any partitioning; exact when small") {
-    graft.plans.GraftFunctions.register(spark)
     val rnd = new Random(275)
     for (trial <- 1 to 5) {
       val n = 1 + rnd.nextInt(80)
@@ -329,10 +328,8 @@ class InvariantsSpec extends AnyFunSuite {
       val out = rows.toDF("g", "item")
         .repartition(1 + rnd.nextInt(6))
         .groupBy(col("g"))
-        .agg(org.apache.spark.sql.functions.call_function(
-          "graft_kmv",
-          graft.functions.TextFunctions.md5Long60(col("item").cast("string")),
-          lit(k)).as("sk"))
+        .agg(graft.plans.Kernels.kmv(
+          graft.functions.TextFunctions.md5Long60(col("item").cast("string")), k).as("sk"))
         .collect().head.getSeq[Long](1)
       val naiveAll = rows.map(_._2).distinct
         .map(v => md5Long60Local(v.toString)).sorted

@@ -44,12 +44,10 @@ class PlanLintSpec extends AnyFunSuite {
     // sketch frame (localCheckpoint) so its agg plan is not visible
     // from the outer DF — lint the sketch-build plan directly.
     import org.apache.spark.sql.functions._
-    graft.plans.GraftFunctions.register(spark)
     val ev = graft.sources.Tables.load(spark, GraftTestSession.Sf0001, "events")
     val df = ev.groupBy(col("event_type")).agg(
-      call_function("graft_kmv",
-        graft.functions.TextFunctions.md5Long60(col("user_id").cast("string")),
-        lit(128)).as("sk"))
+      graft.plans.Kernels.kmv(
+        graft.functions.TextFunctions.md5Long60(col("user_id").cast("string")), 128).as("sk"))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("partial_graft_kmv"),
       s"KMV aggregate is not partial (map-side) in:\n${plan.take(2000)}")
